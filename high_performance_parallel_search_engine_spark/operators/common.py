@@ -7,47 +7,49 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 
+# monotonically_increasing_id() = partition index << 33 | row index
+_ROW_BITS = 33
+
+
 def with_global_seq_counted(df: DataFrame, order_cols: list[str],
                             col_name: str = "seq",
                             offset: int = 0) -> tuple[DataFrame, int]:
     """Deterministic dense global sequence following `order_cols`, fully
     JVM-side and distributed (no single-partition sort, no Python row
-    round-trip): range-repartition + per-partition sort (materialized), a
-    tiny per-partition count collect, then row_number within partition plus
-    the partition's global offset. The serial reference's FIFO positions
-    become this column. Returns (df_with_seq, row_count).
+    round-trip, no window): range-repartition + per-partition sort, then
+    monotonically_increasing_id, which numbers rows in that sorted order
+    and carries the partition index in its high bits. The sorted rows are
+    checkpointed LAZILY, so the tiny per-partition count collect is also
+    the job that materializes them; seq = the partition's global offset +
+    the row index, a plain projection over the checkpoint. `order_cols`
+    must be a unique key (both crawl callers order by one). The serial
+    reference's FIFO positions become this column. Returns
+    (df_with_seq, row_count).
     """
-    from pyspark.sql import Window
-
-    sdf = (df.repartitionByRange(*order_cols)
+    mid = (df.repartitionByRange(*order_cols)
            .sortWithinPartitions(*order_cols)
-           .withColumn("_pid", F.spark_partition_id())
-           .localCheckpoint(eager=True))
+           .withColumn("_mid", F.monotonically_increasing_id())
+           .localCheckpoint(eager=False))
+    pid = F.shiftright(F.col("_mid"), _ROW_BITS)
     counts = {r["_pid"]: r["n"] for r in
-              sdf.groupBy("_pid").agg(F.count("*").alias("n")).collect()}
+              mid.groupBy(pid.alias("_pid"))
+              .agg(F.count("*").alias("n")).collect()}
     total = sum(counts.values())
     offsets = {}
     acc = offset
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    for p in sorted(counts):
+        offsets[p] = acc
+        acc += counts[p]
     if offsets:
         omap = F.create_map(
             *[F.lit(x) for kv in offsets.items() for x in kv])
-        off = F.coalesce(omap[F.col("_pid")], F.lit(0))
+        off = F.coalesce(omap[pid], F.lit(0))
     else:
         off = F.lit(0)
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    out = (sdf.withColumn(
-        col_name,
-        (F.row_number().over(w) - 1 + off).cast(LongType()))
-        .drop("_pid"))
+    row = F.col("_mid").bitwiseAND(F.lit((1 << _ROW_BITS) - 1))
+    out = (mid.withColumn(col_name, (row + off).cast(LongType()))
+           .drop("_mid"))
     return out, total
-
-
-def with_global_seq(df: DataFrame, order_cols: list[str],
-                    col_name: str = "seq", offset: int = 0) -> DataFrame:
-    return with_global_seq_counted(df, order_cols, col_name, offset)[0]
 
 
 def seen_anti_join(candidates: DataFrame, seen: DataFrame,

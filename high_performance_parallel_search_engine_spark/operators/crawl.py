@@ -18,9 +18,16 @@ Scale design notes (the 100 TB story):
 - html bytes never cross a shuffle: the fetch gate joins a slim projection
   (url, length(html)), and only surviving rows re-join for html right before
   the extraction UDF;
-- the stop cutoff runs as cheap aggregates when no stop can possibly bind
-  this round (the common case) and only falls back to an ordered window in
-  the crawl's final round;
+- the stop cutoff runs as aggregates observed on the fetch-gate checkpoint
+  when no stop can possibly bind this round (the common case) and only
+  falls back to an ordered window in the crawl's final round;
+- a traced round has a fixed floor of about 25 Spark jobs whatever its
+  size: ONE fetch-gate checkpoint serves the fetch set, the deferrals and
+  the stop-cutoff counts; every other count (events per action, politeness
+  delay, trailing failures, candidates, enqueued) rides a snapshot write as
+  an Observation; the dense event and frontier seqs are a projection over a
+  lazily checkpointed range-sorted frame (common.with_global_seq_counted),
+  with no window and no extra exchange;
 - frontier/url_seen snapshots are parquet-per-round with a manifest commit
   marker (Iceberg-snapshot semantics without the runtime dep); url_seen is
   stored as per-round DELTAS, read back as a multi-path union - O(new urls)
@@ -72,6 +79,7 @@ FRONTIER_SCHEMA = StructType([
 
 EVENT_COLS = ["seq", "round", "url", "parent_url", "depth", "host",
               "action", "delay_ms"]
+EVENT_ACTIONS = ("fetched", "fetch_failed", "robots_denied", "deferred")
 
 
 @dataclass
@@ -229,9 +237,12 @@ def compact_url_seen(spark: SparkSession, workdir: str,
 
     seen = _read_url_seen(spark, workdir, upto_round)
     tmp = Path(workdir) / "_url_seen_compact.tmp"
+    # the row count rides the write (no re-read count job)
+    obs = Observation(f"compact_{upto_round}")
     seen.repartition(max(spark.sparkContext.defaultParallelism, 1)) \
+        .observe(obs, F.count(F.lit(1)).alias("n")) \
         .write.mode("overwrite").parquet(str(tmp))
-    n = spark.read.parquet(str(tmp)).count()
+    n = obs.get["n"]
     init = _round_dir(workdir, -1) / "url_seen_delta.parquet"
     _sh.rmtree(init, ignore_errors=True)
     tmp.rename(init)
@@ -252,6 +263,22 @@ def _read_url_seen(spark: SparkSession, workdir: str, upto_round: int) -> DataFr
     # (init_crawl and both round writers); skipping footer inference
     # removes one driver-synchronized 1-task job from every round
     return spark.read.schema("url string").parquet(*paths)
+
+
+def _check_url_seen_layout(spark: SparkSession, workdir: str) -> None:
+    """Resume guard: _read_url_seen applies the explicit `url string`
+    schema, so a delta written with any other layout (a workdir from an
+    older version) would read back as NULL urls and silently let seen
+    urls through the anti-join. The init delta must be exactly that one
+    column; anything else fails loudly."""
+    path = _round_dir(workdir, -1) / "url_seen_delta.parquet"
+    fields = [(f.name, f.dataType)
+              for f in spark.read.parquet(str(path)).schema.fields]
+    if fields != [("url", StringType())]:
+        raise ValueError(
+            f"cannot resume {workdir}: {path} holds columns {fields}, "
+            "expected exactly one `url` string column (a workdir written "
+            "by another version of the crawler)")
 
 
 def _budgets_df(spark: SparkSession, config: CrawlConfig) -> DataFrame | None:
@@ -344,15 +371,15 @@ def _prune_pages_by_bucket(pages: DataFrame, frontier: DataFrame,
     write_bucketed_pages) to the frontier's buckets. Semantics-neutral: a
     pruned page can never match the fetch join (its bucket holds no frontier
     url). Skipped for big frontiers (expected to touch every bucket) so the
-    tiny distinct-buckets job only runs when it can actually prune - this is
+    tiny bucket-list collect only runs when it can actually prune - this is
     what makes a 32-URL round against a 100 TB corpus cost 32 buckets, not a
     full scan. Returns (pages, applied, n_buckets_kept)."""
     if not _want_bucket_prune(pages, config, state):
         return pages, False, None
     B = config.pages_buckets
-    bks = sorted(r["b"] for r in frontier.select(
+    bks = sorted({r["b"] for r in frontier.select(
         F.pmod(F.xxhash64("url"), F.lit(B)).cast("int").alias("b"))
-        .distinct().collect())
+        .collect()})
     if len(bks) >= B:
         return pages, False, None
     return pages.where(F.col("bucket").isin(bks)), True, len(bks)
@@ -397,10 +424,13 @@ def _pushdown_small_frontier(pages: DataFrame, frontier: DataFrame,
     `max_urls` (CrawlConfig.url_pushdown_max) gates the regime; it is
     clamped to URL_PUSHDOWN_MAX, and any admitted list is chunked to
     <=URL_PUSHDOWN_CHUNK-value In filters (JVM stack safety).
+    The collected list is deduplicated as a Python set: at most
+    URL_PUSHDOWN_MAX rows come back, so that costs less than a distinct()
+    shuffle job.
     Returns (pages, applied)."""
     if not _want_url_pushdown(max_urls, state):
         return pages, False
-    urls = [r["url"] for r in frontier.select("url").distinct().collect()]
+    urls = sorted({r["url"] for r in frontier.select("url").collect()})
     if not urls or len(urls) > _pushdown_cap(max_urls):
         return pages, False
     return _chunked_url_filter(pages, urls), True
@@ -460,9 +490,9 @@ def _prune_and_pushdown(pages: DataFrame, frontier: DataFrame,
                         state: CrawlState) -> tuple[DataFrame, bool,
                                                     int | None]:
     """Bucket pruning + point-lookup pushdown with ONE driver job: when the
-    frontier is small enough for the url pushdown, a single distinct
-    collect yields both the url list and the bucket set (bucket is a
-    function of url), instead of the two separate jobs the standalone
+    frontier is small enough for the url pushdown, a single collect yields
+    both the url list and the bucket set (bucket is a function of url),
+    instead of the two separate collects the standalone
     gates would run - one less per-round sync point on exactly the small
     rounds where fixed costs dominate the wall. Falls back to the
     standalone gates when only one regime applies. Semantics identical to
@@ -487,9 +517,9 @@ def _prune_and_pushdown(pages: DataFrame, frontier: DataFrame,
         return pages, pruned or pushed, (kb if pruned
                                          else B if pushed else None)
     cap = _pushdown_cap(config.url_pushdown_max)
-    rows = (frontier.select(
-        "url", F.pmod(F.xxhash64("url"), F.lit(B)).cast("int").alias("b"))
-        .distinct().collect())
+    rows = frontier.select(
+        "url", F.pmod(F.xxhash64("url"), F.lit(B)).cast("int").alias("b")
+    ).collect()
     bounded = False
     k_files: int | None = None
     bks = sorted({r["b"] for r in rows})
@@ -510,7 +540,7 @@ def run_round_fast(spark: SparkSession, pages: DataFrame, workdir: str,
                    state: CrawlState, config: CrawlConfig) -> dict:
     """Throughput-mode round (config.trace=False): same dataflow as
     run_round minus the event trace, dense-seq assignment and stop cutoffs -
-    ~3 job-synchronization points per round instead of ~9. Requires
+    about 11 Spark jobs per round against the traced round's ~25. Requires
     effectively-unbounded max_pages/failure_stop (asserted); frontier
     ordering keys remain deterministic (xxhash64) so dedup tie-breaks are
     reproducible, but are NOT the serial FIFO trace."""
@@ -684,36 +714,47 @@ def run_round(spark: SparkSession, pages: DataFrame, workdir: str,
     if config.politeness is not None:
         default_budget = config.politeness.get("*")
     ranked = apply_budget(allowed, _budgets_df(spark, config), default_budget)
-    deferred = ranked.where(~F.col("fetch_now")).drop("fetch_now", "host_rank")
-    fetchset = ranked.where(F.col("fetch_now")).drop("fetch_now", "host_rank")
 
-    # ---- fetch gate on a slim projection (html never shuffles) ----
-    page_len = pages.select("url", F.length("html").alias("_hlen"))
-    meta = (fetchset.join(page_len, "url", "left")
-            .withColumn("ok", F.col("_hlen").isNotNull() & (F.col("_hlen") > 100)
+    # ---- fetch gate: ONE checkpoint of the whole budget output, left-joined
+    # to a slim projection (html never shuffles). Only fetch_now rows probe
+    # the pages (a deferred row never matches, so a url captured twice
+    # cannot duplicate it); meta and deferred are filters of the checkpoint,
+    # and the stop-cutoff aggregates ride the checkpoint job.
+    page_len = pages.select(F.col("url").alias("_purl"),
+                            F.length("html").alias("_hlen"))
+    fetch_now = F.col("fetch_now")
+    obs_gate = Observation(f"r{rnd}_gate")
+    gate = (ranked.join(page_len, (F.col("url") == F.col("_purl")) & fetch_now,
+                        "left")
+            .withColumn("ok", fetch_now & F.col("_hlen").isNotNull()
+                        & (F.col("_hlen") > 100)
                         & is_html_content_url_col(F.col("url")))
-            .drop("_hlen"))
-    meta = meta.localCheckpoint(eager=True)  # fetch gate reused 3x below
+            .drop("_purl", "_hlen")
+            .observe(obs_gate,
+                     F.count(F.when(fetch_now, 1)).alias("n"),
+                     F.count(F.when(F.col("ok"), 1)).alias("n_ok"),
+                     F.max(F.when(F.col("ok"), F.col("seq")))
+                     .alias("max_ok_seq"))
+            .localCheckpoint(eager=True))
+    meta = gate.where(fetch_now).drop("fetch_now")
+    deferred = gate.where(~fetch_now).drop("fetch_now", "ok")
+    agg = obs_gate.get
     _mark("fetch_gate")
 
     # ---- stop cutoff (maxPages + consecutive failures) ----
     remaining = config.max_pages - state.pages_crawled
-    agg = meta.agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("ok").cast("long")).alias("n_ok"),
-        F.max(F.when(F.col("ok"), F.col("seq"))).alias("max_ok_seq"),
-    ).collect()[0]
-    n_att, n_ok = agg["n"] or 0, agg["n_ok"] or 0
+    n_att, n_ok = agg["n"], agg["n_ok"]
     n_fail = n_att - n_ok
     stop_seq = None
     event_cut = None
+    # fail_carry = the failed attempts after the last success; when this
+    # round has a success, the events write counts them (trail_after)
+    trail_after = None
     if n_ok < remaining and state.fail_carry + n_fail < config.failure_stop:
         # fast path: no stop can bind; everyone attempts
         attempted = meta.withColumn("attempted", F.lit(True))
         if agg["max_ok_seq"] is not None:
-            trailing = meta.where(~F.col("ok")
-                                  & (F.col("seq") > agg["max_ok_seq"])).count()
-            state.fail_carry = trailing
+            trail_after = agg["max_ok_seq"]
         else:
             state.fail_carry += n_att
     else:
@@ -766,13 +807,11 @@ def run_round(spark: SparkSession, pages: DataFrame, workdir: str,
             if first is not None:
                 state.stopped = ("max_pages" if first["_cum_ok"] >= remaining
                                  else "failure_stop")
-        # fail carry (only relevant if no stop: compute trailing run)
-        if stop_seq is None:
-            if agg["max_ok_seq"] is not None:
-                state.fail_carry = meta.where(
-                    ~F.col("ok") & (F.col("seq") > agg["max_ok_seq"])).count()
-            else:
-                state.fail_carry += n_att
+        # fail carry (only relevant if no stop; then every row attempted)
+        elif agg["max_ok_seq"] is not None:
+            trail_after = agg["max_ok_seq"]
+        else:
+            state.fail_carry += n_att
 
     _mark("stop_cutoff")
     att = attempted.where(F.col("attempted"))
@@ -817,13 +856,10 @@ def run_round(spark: SparkSession, pages: DataFrame, workdir: str,
     extracted = extracted.localCheckpoint(eager=True)  # cut html lineage
     _mark("extraction")
 
-    pages_out = extracted.select(
-        "url", F.lit(rnd).alias("round"), "seq", "depth", "parent_url",
-        "host", "text", "warc_ts", "lang", "lineage_partition")
-
     # ---- candidate links -> next frontier ----
+    expands = (F.col("depth") < config.max_depth) & ~F.col("_skip_links")
     cands = (
-        extracted.where((F.col("depth") < config.max_depth) & ~F.col("_skip_links"))
+        extracted.where(expands)
         .select(F.col("seq").alias("parent_seq"),
                 F.col("url").alias("parent_url_c"),
                 F.col("depth").alias("parent_depth"),
@@ -888,14 +924,39 @@ def run_round(spark: SparkSession, pages: DataFrame, workdir: str,
         .select([f.name for f in FRONTIER_SCHEMA.fields])
     _mark("frontier_seq")
 
-    # ---- persist snapshot + metric aggs, driver-thread-parallel: all six
-    # actions read already-materialized (checkpointed) inputs, so they are
-    # independent jobs the scheduler can interleave (manifest still last =
-    # commit marker)
+    # ---- persist snapshot from parallel threads: every write reads
+    # already-materialized (checkpointed) inputs, so they are independent
+    # jobs the scheduler can interleave (manifest still last = commit
+    # marker). The round's counts ride the writes as Observations - each
+    # on a write that always runs over its whole checkpoint, never inside
+    # a subplan the optimizer may prune.
+    action = F.col("action")
+    obs_ev = Observation(f"r{rnd}_events")
     ev_out = (events.select("event_seq",
                             *[c for c in EVENT_COLS if c != "seq"],
                             "frontier_seq")
-              .withColumnRenamed("event_seq", "seq"))
+              .withColumnRenamed("event_seq", "seq")
+              .observe(obs_ev,
+                       *[F.count(F.when(action == a, 1)).alias(a)
+                         for a in EVENT_ACTIONS],
+                       F.sum("delay_ms").alias("delay"),
+                       F.count(F.when((action == "fetch_failed")
+                                      & (F.col("frontier_seq")
+                                         > F.lit(trail_after)), 1))
+                       .alias("trailing_fail")))
+    # candidates = the valid links of expanding pages, i.e. cands' rows
+    obs_pages = Observation(f"r{rnd}_pages")
+    valid_links = F.filter("links", lambda u: valid_crawl_url_col(
+        u, F.col("base_domain")))
+    pages_out = (extracted.observe(
+        obs_pages, F.sum(F.when(expands & F.col("links").isNotNull(),
+                                F.size(valid_links))).alias("candidates"))
+        .select("url", F.lit(rnd).alias("round"), "seq", "depth",
+                "parent_url", "host", "text", "warc_ts", "lang",
+                "lineage_partition"))
+    obs_seen = Observation(f"r{rnd}_seen")
+    seen_out = children.select("url").observe(
+        obs_seen, F.count(F.lit(1)).alias("n"))
     jobs = {
         "w_events": lambda: ev_out.write.mode("overwrite").parquet(
             str(d / "events.parquet")),
@@ -903,27 +964,25 @@ def run_round(spark: SparkSession, pages: DataFrame, workdir: str,
             str(d / "pages.parquet")),
         "w_frontier": lambda: next_frontier.write.mode("overwrite").parquet(
             str(d / "frontier_next.parquet")),
-        "w_seen": lambda: children.select("url").write.mode("overwrite")
-        .parquet(str(d / "url_seen_delta.parquet")),
-        "ev_rows": lambda: (events.groupBy("action")
-                            .agg(F.count("*").alias("cnt"),
-                                 F.sum("delay_ms").alias("delay")).collect()),
+        "w_seen": lambda: seen_out.write.mode("overwrite").parquet(
+            str(d / "url_seen_delta.parquet")),
         "lineage": lambda: (extracted.groupBy("lineage_partition")
                             .agg(F.count("*").alias("cnt")).collect()),
-        "n_children": lambda: children.count(),
-        "n_cands": lambda: cands.count(),
     }
     with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
         futs = {k: pool.submit(fn) for k, fn in jobs.items()}
         res = {k: f.result() for k, f in futs.items()}
-    ev_counts = {r["action"]: r["cnt"] for r in res["ev_rows"]}
-    delay_sum = sum(r["delay"] or 0 for r in res["ev_rows"])
+    ev_obs = obs_ev.get
+    ev_counts = {a: ev_obs[a] for a in EVENT_ACTIONS if ev_obs[a]}
+    delay_sum = ev_obs["delay"] or 0
+    if trail_after is not None:
+        state.fail_carry = ev_obs["trailing_fail"]
     fetched = ev_counts.get("fetched", 0)
     part_lineage = [
         {"partition": r["lineage_partition"], "pages": r["cnt"]}
         for r in res["lineage"]]
-    n_children = res["n_children"]
-    n_cands = res["n_cands"]
+    n_children = obs_seen.get["n"]
+    n_cands = obs_pages.get["candidates"] or 0
     _mark("writes_and_metrics")
     metrics = {
         "round": rnd, "events": ev_counts, "fetched": fetched,
@@ -983,6 +1042,7 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: list[str],
                 f"cannot resume from round {resume_from}: url_seen deltas "
                 f"up to round {marker.read_text()} were compacted away")
         state, config, _last = load_state(workdir, from_round=resume_from)
+        _check_url_seen_layout(spark, workdir)
         for d in sorted(Path(workdir).glob("round=*")):
             r = int(d.name.split("=")[1])
             if r > resume_from:
@@ -991,6 +1051,7 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: list[str],
             return state
     elif resume:
         state, config, _last = load_state(workdir)
+        _check_url_seen_layout(spark, workdir)
         if state.stopped:
             return state
     else:

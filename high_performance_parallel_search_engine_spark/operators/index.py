@@ -53,9 +53,11 @@ def spread_narrow_input(df: DataFrame) -> DataFrame:
     When the scan's parallelism is below half the session's cores,
     repartition ROWS to the core count before the heavy per-row work:
     one small exchange of raw text buys full-width tokenization.
-    Scale-adaptive by construction - a 100 TB table scans as thousands
-    of splits, `cur >= target/2` holds, and this is a no-op (no constant
-    tuned to local mode; `defaultParallelism` follows the master)."""
+    Repartitions when `cur * 2 <= target`, so a scan at exactly half the
+    cores is spread too. Scale-adaptive by construction - a 100 TB table
+    scans as thousands of splits, `cur * 2 > target` holds, and this is a
+    no-op (no constant tuned to local mode; `defaultParallelism` follows
+    the master)."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:
@@ -149,14 +151,17 @@ def corpus_stats(docs: DataFrame, **kw) -> DataFrame:
     shuffle that collapses each partition to its unique pairs - leaves the
     Expand running over |postings| rows instead of |tokens|. Values are
     identical: sum(tf) == count of kept tokens (exact long arithmetic),
-    and the distinct counts are over the same key sets."""
+    and the distinct counts are over the same key sets. An empty or
+    all-stopword corpus gives total_tokens 0 (count(*) semantics, not
+    the NULL an empty sum returns) and a NULL avg_dl."""
     g = doc_tokens(docs, **kw).groupBy("term", "doc_id") \
         .agg(F.count("*").alias("tf"))
+    tokens = F.coalesce(F.sum("tf"), F.lit(0))
     return g.agg(
-        F.sum("tf").alias("total_tokens"),
+        tokens.alias("total_tokens"),
         F.countDistinct("term").alias("unique_terms"),
         F.countDistinct("doc_id").alias("total_docs"),
-        (F.sum("tf") / F.countDistinct("doc_id")).alias("avg_dl"),
+        F.try_divide(tokens, F.countDistinct("doc_id")).alias("avg_dl"),
     )
 
 

@@ -21,13 +21,6 @@ def delay_ms_col(url):
     return (F.crc32(url.cast("binary")) % 300 + 200).cast("int")
 
 
-def budget_rank(df: DataFrame, host_col: str = "host",
-                order_col: str = "seq") -> DataFrame:
-    """row_number within host by frontier order -> `host_rank` (1-based)."""
-    w = Window.partitionBy(host_col).orderBy(order_col)
-    return df.withColumn("host_rank", F.row_number().over(w))
-
-
 def apply_budget(df: DataFrame, budgets: DataFrame | None,
                  default_budget: int | None,
                  host_col: str = "host", order_col: str = "seq") -> DataFrame:

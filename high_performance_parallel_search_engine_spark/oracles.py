@@ -218,10 +218,6 @@ SHINGLE_CTE = SURF_CTE + """
 """
 
 
-def _phash_sql(e: str) -> str:
-    return D.phash_sql(e)
-
-
 # ---------------------------------------------------------------------------
 # the registry
 # ---------------------------------------------------------------------------

@@ -666,3 +666,16 @@ def test_interactive_query_conf_concurrent_restore(spark):
         t.join(timeout=60)
     assert spark.conf.get("spark.sql.shuffle.partitions") == orig_sp
     assert spark.conf.get("spark.sql.adaptive.enabled") == orig_aqe
+
+
+@pytest.mark.parametrize("rows", [[], [(0, "the of a an in"), (1, "")]],
+                         ids=["empty", "all_stopwords"])
+def test_corpus_stats_empty_corpus_counts_zero(spark, docs, rows):
+    """No kept token: total_tokens is 0 like the oracle's COUNT(*), not
+    the NULL an empty sum gives; avg_dl has no documents to average."""
+    empty = spark.createDataFrame(rows, "doc_id long, text string")
+    got = IX.corpus_stats(empty).collect()[0].asDict()
+    assert got == {"total_tokens": 0, "unique_terms": 0, "total_docs": 0,
+                   "avg_dl": None}
+    full = IX.corpus_stats(docs).collect()[0]
+    assert full["total_tokens"] == 24 and full["avg_dl"] == 6.0
