@@ -47,7 +47,7 @@ def build_session(app: str = "hppse-spark", master: str | None = None,
                     or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # point-lookup pushdown: small crawl frontiers push `url IN (...)`
-        # into the parquet scan (operators/crawl._pushdown_small_frontier);
+        # into the parquet scan (operators/crawl._narrow_pages_scan);
         # the default threshold (10) would collapse big IN lists to a
         # min/max range, which prunes nothing on hash-distributed urls -
         # raise it so the whole list reaches the row-group/page-index stats.

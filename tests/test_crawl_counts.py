@@ -1,11 +1,12 @@
-"""Traced-round job floor and the counts that ride its writes.
+"""Round job floors and the counts that ride the round's writes.
 
 A traced round (run_round, the CLI default) takes its counts from
 Observations on its checkpoints and snapshot writes instead of separate
 count jobs, and numbers its events and next frontier with a windowless
-dense seq. These tests pin the round's Spark job count, check that dense
-seq, and recompute every metrics.json / manifest count from the parquet
-the round wrote.
+dense seq. These tests pin the Spark job count and stage names of traced
+and throughput (trace=False) rounds, check that dense seq, recompute
+every metrics.json / manifest count from the parquet the round wrote, and
+cover resuming workdirs written by older versions.
 """
 
 import json
@@ -31,6 +32,10 @@ from high_performance_parallel_search_engine_spark.sources.synth import (
     build_corpus_df,
     seed_urls,
 )
+from high_performance_parallel_search_engine_spark.sources.tables import (
+    read_bucketed_pages,
+    write_bucketed_pages,
+)
 
 CORPUS = dict(n_hosts=3, pages_per_host=40, n_medium=4, n_tiny_per_host=2,
               seed=7, with_oracle_text=False)
@@ -46,6 +51,16 @@ def corpus(spark, tmp_path_factory):
     df.write.parquet(path)
     html = {r["url"]: bytes(r["html"]) for r in df.collect()}
     return spark.read.parquet(path), html
+
+
+@pytest.fixture(scope="module")
+def bucketed_corpus(spark, tmp_path_factory):
+    """The same corpus as a bucket-partitioned pages table."""
+    df = build_corpus_df(spark, **CORPUS).select("url", "warc_ts", "html",
+                                                 "lang")
+    path = str(tmp_path_factory.mktemp("bucketed") / "pages")
+    write_bucketed_pages(df, path, n_buckets=4)
+    return read_bucketed_pages(spark, path)
 
 
 def _max_job_id(spark) -> int:
@@ -100,10 +115,16 @@ def test_global_seq_empty_input(spark):
 # job floor
 # ---------------------------------------------------------------------------
 
-def test_traced_round_job_count(spark, corpus, tmp_path, monkeypatch):
-    """Jobs are counted by job-id watermark on the status store (job
-    groups do not reach the round's write pool threads)."""
-    pages, _ = corpus
+TRACED_STAGES = ["fetch_gate", "stop_cutoff", "events_seq", "extraction",
+                 "arbitration", "frontier_seq", "writes_and_metrics"]
+# bench.py reads the throughput round's "extract_write" wall
+THROUGHPUT_STAGES = ["extract_write", "arbitrate_ckpt", "writes_and_metrics"]
+
+
+def _counted_crawl(spark, monkeypatch, pages, workdir, cfg):
+    """Run a crawl; returns (state, Spark jobs of each round). Jobs are
+    counted by job-id watermark on the status store (job groups do not
+    reach the round's write pool threads)."""
     jobs: list[int] = []
     inner = crawl_mod.run_round
 
@@ -114,14 +135,47 @@ def test_traced_round_job_count(spark, corpus, tmp_path, monkeypatch):
         return out
 
     monkeypatch.setattr(crawl_mod, "run_round", counted)
+    return run_crawl(spark, pages, seed_urls(3), str(workdir), cfg), jobs
+
+
+def _stage_keys(state) -> list[list[str]]:
+    return [list(m["stage_wall"]) for m in state.metrics]
+
+
+def test_traced_round_job_count(spark, corpus, tmp_path, monkeypatch):
+    pages, _ = corpus
     cfg = CrawlConfig(max_depth=8, max_pages=60, politeness={"*": 6},
                       arbitration="exact")
-    state = run_crawl(spark, pages, seed_urls(3), str(tmp_path / "c"), cfg)
+    state, jobs = _counted_crawl(spark, monkeypatch, pages, tmp_path / "c",
+                                 cfg)
     assert state.stopped == "max_pages"
+    assert _stage_keys(state) == [TRACED_STAGES] * len(jobs)
     assert len(jobs) >= 3, jobs
     *warm, stop = jobs
     assert max(warm) <= 28, jobs
     assert stop <= 30, jobs
+
+
+@pytest.mark.parametrize("politeness, want", [
+    # the last round short-circuits: its pages are all at max_depth
+    (None, [11, 11, 7]),
+    ({"*": 20}, [16, 16, 16, 16]),
+])
+def test_throughput_round_job_count(spark, bucketed_corpus, tmp_path,
+                                    monkeypatch, politeness, want):
+    """The trace=False round (the bulk crawl form) on a bucketed table:
+    scan narrowing, inner broadcast fetch join, extraction during the
+    pages write, scale arbitration and the pooled writes."""
+    pages, nb = bucketed_corpus
+    unbounded = 1 << 40
+    cfg = CrawlConfig(max_depth=3, max_pages=unbounded,
+                      failure_stop=unbounded, politeness=politeness,
+                      arbitration="scale", trace=False, pages_buckets=nb)
+    state, jobs = _counted_crawl(spark, monkeypatch, pages, tmp_path / "c",
+                                 cfg)
+    assert state.stopped == "frontier_empty"
+    assert jobs == want
+    assert _stage_keys(state) == [THROUGHPUT_STAGES] * len(jobs)
 
 
 # ---------------------------------------------------------------------------
@@ -224,3 +278,24 @@ def test_resume_rejects_legacy_url_seen_layout(spark, corpus, tmp_path, how):
                   CrawlConfig(max_depth=3, max_pages=10**6), **kw)
     # nothing was rewound or overwritten
     assert load_state(str(wd))[2] == 0
+
+
+def test_resume_accepts_manifest_with_removed_use_bloom(spark, corpus,
+                                                        tmp_path):
+    """Manifests written before the `use_bloom` knob was removed carry it
+    in their config; resuming them ignores the key."""
+    pages, _ = corpus
+    wd = tmp_path / "c"
+    cfg = CrawlConfig(max_depth=3, max_pages=10**6, max_rounds=1)
+    run_crawl(spark, pages, seed_urls(3), str(wd), cfg)
+    for mf in wd.glob("round=*/manifest.json"):
+        m = json.loads(mf.read_text())
+        assert "use_bloom" not in m["config"]
+        m["config"].update(use_bloom=True, max_rounds=8)
+        mf.write_text(json.dumps(m))
+    state = run_crawl(spark, pages, seed_urls(3), str(wd), resume=True)
+    assert state.stopped == "frontier_empty"
+    rounds = _rounds(wd)
+    assert len(rounds) == 3
+    man = json.loads((rounds[-1] / "manifest.json").read_text())
+    assert "use_bloom" not in man["config"]

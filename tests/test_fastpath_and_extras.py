@@ -2,6 +2,8 @@
 multimodal plumbing, and physical plan shapes."""
 
 import tempfile
+import warnings
+from dataclasses import replace
 
 import pandas as pd
 import pytest
@@ -66,6 +68,47 @@ def test_fast_round_resume(spark, tmp_path):
     got = {r["url"] for r in
            spark.read.parquet(f"{wd}/round=*/pages.parquet").collect()}
     assert got == set(expected.fetch_order)
+
+
+def test_fast_round_rejects_bounded_stops(spark, tmp_path):
+    """A throughput round has no stop machinery, so a bounded stop fails
+    loudly (a ValueError, which `python -O` does not strip)."""
+    rows = list(corpus_rows(n_hosts=1, pages_per_host=10, n_medium=0,
+                            with_oracle_text=False))
+    with pytest.raises(ValueError, match="requires unbounded stop"):
+        run_crawl(spark, _pages_df(spark, rows), [page_url(0, 0)],
+                  str(tmp_path / "b"),
+                  CrawlConfig(max_depth=2, max_pages=10,
+                              failure_stop=1 << 40, trace=False))
+
+
+def test_fast_round_warns_that_priority_is_ignored(spark, tmp_path):
+    """trace=False keys its frontier by xxhash64(url) whatever `priority`
+    says: run_crawl warns once per crawl, and the crawl equals its FIFO
+    control."""
+    rows = list(corpus_rows(n_hosts=1, pages_per_host=30, n_medium=0,
+                            with_oracle_text=False))
+    seeds = [page_url(0, 0)]
+    cfg = CrawlConfig(max_depth=3, max_pages=1 << 40, failure_stop=1 << 40,
+                      arbitration="scale", trace=False)
+    got = {}
+    for priority in (False, True):
+        wd = str(tmp_path / f"p{priority}")
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            run_crawl(spark, _pages_df(spark, rows), seeds, wd,
+                      replace(cfg, priority=priority))
+        msgs = [str(w.message) for w in caught
+                if "priority" in str(w.message)]
+        assert len(msgs) == int(priority), msgs
+        got[priority] = sorted(
+            tuple(r) for r in spark.read.parquet(
+                f"{wd}/round=*/frontier_next.parquet").collect())
+    assert got[True] == got[False]
+    with pytest.warns(UserWarning, match="priority is ignored"):
+        run_crawl(spark, _pages_df(spark, rows), seeds,
+                  str(tmp_path / "w"), replace(cfg, priority="openmp",
+                                               max_rounds=1))
 
 
 def test_streaming_politeness_monitor(spark, tmp_path):

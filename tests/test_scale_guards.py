@@ -185,8 +185,9 @@ def test_small_frontier_url_pushdown_reaches_parquet(spark, tmp_path):
 
     from high_performance_parallel_search_engine_spark.operators.crawl import (
         URL_PUSHDOWN_MAX,
+        CrawlConfig,
         CrawlState,
-        _pushdown_small_frontier,
+        _narrow_pages_scan,
     )
     from high_performance_parallel_search_engine_spark.sources.synth import (
         build_corpus_df,
@@ -207,11 +208,14 @@ def test_small_frontier_url_pushdown_reaches_parquet(spark, tmp_path):
     meta = _json.loads((tmp_path / "p" / "_bucketing.json").read_text())
     assert meta["sorted_by"] == "url"
 
+    # an unbucketed config: the url pushdown is the only regime; None =
+    # the JVM-safe max cap
+    cfg = CrawlConfig(url_pushdown_max=None)
     fr = spark.createDataFrame([(page_url(0, i),) for i in range(3)],
                                "url string")
-    small, applied = _pushdown_small_frontier(pages, fr,
-                                              CrawlState(next_frontier_rows=3))
-    assert applied
+    small, applied, k_files = _narrow_pages_scan(
+        pages, fr, cfg, CrawlState(next_frontier_rows=3))
+    assert applied and k_files is None
     plan = small._jdf.queryExecution().executedPlan().toString()
     scan_lines = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert scan_lines and any("In(url" in ln for ln in scan_lines)
@@ -237,8 +241,8 @@ def test_small_frontier_url_pushdown_reaches_parquet(spark, tmp_path):
     n_mid = URL_PUSHDOWN_CHUNK + 7
     fr_mid = spark.createDataFrame(
         [(page_url(0, i),) for i in range(n_mid)], "url string")
-    mid, _ = _pushdown_small_frontier(pages, fr_mid,
-                                      CrawlState(next_frontier_rows=n_mid))
+    mid, _, _ = _narrow_pages_scan(pages, fr_mid, cfg,
+                                   CrawlState(next_frontier_rows=n_mid))
     mid_plan = mid._jdf.queryExecution().executedPlan().toString()
     mid_scans = [ln for ln in mid_plan.splitlines() if "PushedFilters" in ln]
     assert len(mid_scans) == 2 and all("In(url" in ln for ln in mid_scans)
@@ -246,9 +250,10 @@ def test_small_frontier_url_pushdown_reaches_parquet(spark, tmp_path):
     # the two disjoint chunks must not double-count any of them
     assert mid.count() == mid.select("url").distinct().count()
 
-    big, applied = _pushdown_small_frontier(
-        pages, fr, CrawlState(next_frontier_rows=URL_PUSHDOWN_MAX + 1))
-    assert big is pages and not applied  # gate skipped - no collect/filter
+    big, applied, k_files = _narrow_pages_scan(
+        pages, fr, cfg, CrawlState(next_frontier_rows=URL_PUSHDOWN_MAX + 1))
+    # gate skipped - no collect/filter
+    assert big is pages and not applied and k_files is None
 
 
 def test_pair_operators_scan_corpus_once(spark, tmp_path):
@@ -294,16 +299,19 @@ def test_pair_operators_scan_corpus_once(spark, tmp_path):
 
 
 def test_prune_and_pushdown_equals_sequential_gates(spark, tmp_path):
-    """_prune_and_pushdown (one driver job) must keep exactly the pages the
-    standalone bucket-prune + url-pushdown sequence keeps, in all four
-    regimes: both gates active, prune-only (frontier above the pushdown
-    cap), pushdown-only (unbucketed table), neither (big frontier)."""
+    """_narrow_pages_scan (at most one driver collect) must keep exactly
+    the pages each applicable regime keeps, in all four regimes: both
+    active, prune-only (frontier above the pushdown cap), pushdown-only
+    (unbucketed config), neither (big frontier) - and at the gates'
+    boundaries. The reference is computed directly in Spark: frontier
+    urls that are pages when pushdown applies, pages in the frontier's
+    pmod(xxhash64(url), B) buckets when pruning applies."""
+    from pyspark.sql import functions as F
+
     from high_performance_parallel_search_engine_spark.operators.crawl import (
         CrawlConfig,
         CrawlState,
-        _prune_and_pushdown,
-        _prune_pages_by_bucket,
-        _pushdown_small_frontier,
+        _narrow_pages_scan,
     )
     from high_performance_parallel_search_engine_spark.sources.synth import (
         build_corpus_df,
@@ -319,60 +327,63 @@ def test_prune_and_pushdown_equals_sequential_gates(spark, tmp_path):
     write_bucketed_pages(df.select("url", "warc_ts", "html", "lang"),
                          str(tmp_path / "p"), n_buckets=8)
     bucketed, nb = read_bucketed_pages(spark, str(tmp_path / "p"))
-    flat = spark.read.parquet(str(tmp_path / "p"))  # has bucket col too
 
     def urls_of(pages):
         return sorted(r["url"] for r in pages.select("url").collect())
 
     fr = spark.createDataFrame([(page_url(h, i),) for h in range(2)
                                 for i in range(5)], "url string")
+    bucket = F.pmod(F.xxhash64("url"), F.lit(nb)).cast("int")
+    fr_buckets = fr.select(bucket.alias("b")).distinct()
+    n_fr_buckets = fr_buckets.count()
+    assert n_fr_buckets < nb  # the frontier misses buckets: pruning bites
+    in_buckets = bucketed.join(fr_buckets, bucket == F.col("b"), "left_semi")
+    in_frontier = bucketed.join(fr, "url", "left_semi")
     cases = [
-        # (config, frontier rows, pages table) -> regime
-        (CrawlConfig(pages_buckets=nb), 10, bucketed),     # both gates
-        (CrawlConfig(pages_buckets=nb, url_pushdown_max=4), 10, bucketed),
+        # (config, frontier rows, prune applies, pushdown applies)
+        (CrawlConfig(pages_buckets=nb), 10, True, True),      # both gates
+        (CrawlConfig(pages_buckets=nb, url_pushdown_max=4), 10, True, False),
         # ^ prune-only: frontier above the pushdown cap
-        (CrawlConfig(pages_buckets=None), 10, bucketed),   # pushdown-only
-        (CrawlConfig(pages_buckets=nb), 10_000, bucketed),  # neither
+        (CrawlConfig(pages_buckets=None), 10, False, True),   # pushdown-only
+        (CrawlConfig(pages_buckets=nb), 10_000, False, False),  # neither
         # threshold boundaries (ADVICE r4 #4): gates must agree AT the
         # boundary, not only inside/outside it
-        (CrawlConfig(pages_buckets=nb), 4 * nb, bucketed),      # n == 4*B
-        (CrawlConfig(pages_buckets=nb), 4 * nb + 1, bucketed),  # just over
-        (CrawlConfig(pages_buckets=nb, url_pushdown_max=10), 10, bucketed),
+        (CrawlConfig(pages_buckets=nb), 4 * nb, True, True),     # n == 4*B
+        (CrawlConfig(pages_buckets=nb), 4 * nb + 1, False, True),  # just over
+        (CrawlConfig(pages_buckets=nb, url_pushdown_max=10), 10, True, True),
         # ^ n == pushdown cap exactly
     ]
-    for cfg, n, pages in cases:
-        st = CrawlState(next_frontier_rows=n)
-        combined, bounded, k_files = _prune_and_pushdown(pages, fr, cfg, st)
-        seq, pruned, kb = _prune_pages_by_bucket(pages, fr, cfg, st)
-        seq, pushed = _pushdown_small_frontier(seq, fr, st,
-                                               cfg.url_pushdown_max)
-        assert urls_of(combined) == urls_of(seq), (cfg.pages_buckets,
-                                                   cfg.url_pushdown_max, n)
-        assert bounded == (pruned or pushed), (cfg.pages_buckets,
-                                               cfg.url_pushdown_max, n)
-        # k_files agrees with the standalone prune's kept-bucket count
-        # when pruning applied; a pushdown-only bounded scan over a
-        # bucketed table reports the full bucket count; unbounded -> None
-        if pruned:
-            assert k_files == kb, (k_files, kb, n)
-        elif pushed and "bucket" in pages.columns and cfg.pages_buckets:
-            assert k_files == cfg.pages_buckets
-        elif not bounded:
-            assert k_files is None
-    # the both-gates regime actually filters down to the frontier's pages
-    # and reports the scan as bounded (the coalesce-gate contract)
-    st = CrawlState(next_frontier_rows=10)
-    both, bounded, k_files = _prune_and_pushdown(bucketed, fr,
-                                                 CrawlConfig(pages_buckets=nb),
-                                                 st)
+    for cfg, n, prune, push in cases:
+        case = (cfg.pages_buckets, cfg.url_pushdown_max, n)
+        narrowed, bounded, k_files = _narrow_pages_scan(
+            bucketed, fr, cfg, CrawlState(next_frontier_rows=n))
+        want = bucketed
+        if prune:
+            want = want.join(in_buckets, "url", "left_semi")
+        if push:
+            want = want.join(in_frontier, "url", "left_semi")
+        assert urls_of(narrowed) == urls_of(want), case
+        assert bounded == (prune or push), case
+        # k_files: the kept bucket count when pruning applied; a
+        # pushdown-only bounded scan over a bucketed table reports the
+        # full bucket count; an unbucketed config or unbounded scan: None
+        if prune:
+            assert k_files == n_fr_buckets, case
+        elif push and cfg.pages_buckets:
+            assert k_files == nb, case
+        else:
+            assert k_files is None, case
+    # the both-gates regime filters down to exactly the frontier's pages
+    both, bounded, k_files = _narrow_pages_scan(
+        bucketed, fr, CrawlConfig(pages_buckets=nb),
+        CrawlState(next_frontier_rows=10))
     assert both.count() == 10 and bounded
-    assert k_files is not None and k_files <= nb
-    # neither-regime: full scan, NOT bounded -> coalesce must not apply
-    st_big = CrawlState(next_frontier_rows=10_000)
-    full, bounded, k_files = _prune_and_pushdown(bucketed, fr,
-                                                 CrawlConfig(pages_buckets=nb),
-                                                 st_big)
-    assert not bounded and k_files is None
+    # neither-regime: the table itself, NOT bounded -> coalesce must not
+    # apply
+    full, bounded, k_files = _narrow_pages_scan(
+        bucketed, fr, CrawlConfig(pages_buckets=nb),
+        CrawlState(next_frontier_rows=10_000))
+    assert full is bucketed and not bounded and k_files is None
 
 
 def test_coalesce_only_when_scan_bounded(spark):
